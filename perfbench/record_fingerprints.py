@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Record the output fingerprints the benchmark checks (benchmarked
 queries without oracle SQL, and the files the training DAG writes) at
-the given scale factors, into ``fingerprints.json``.
+the given scale factors of the fixture in ``data/``, into
+``fingerprints.json``.
 
     python3 perfbench/record_fingerprints.py 0.01 0.001
 
@@ -18,7 +19,6 @@ import shutil
 import sys
 import tempfile
 
-import gen
 import run
 import workloads
 from spans import Tracer
@@ -31,15 +31,14 @@ def main() -> int:
     os.makedirs(run.RUNS, exist_ok=True)
     run_dir = tempfile.mkdtemp(prefix="fingerprints-", dir=run.RUNS)
     try:
-        run._hermetic_env(run_dir, len(os.sched_getaffinity(0)))
+        run._hermetic_env(run_dir, len(os.sched_getaffinity(0)), trace=False)
         sys.path.insert(0, run.ROOT)
         session = importlib.import_module(f"{workloads.PKG}.session")
         registry = importlib.import_module(f"{workloads.PKG}.plans.registry")
         spark = session.get_session(app_name="perfbench-fingerprints")
         try:
             for sf in sys.argv[1:]:
-                sf_dir = os.path.join(run_dir, f"sf{sf}")
-                gen.write(sf_dir, float(sf))
+                sf_dir = os.path.join(run.DATA, f"sf{float(sf)}")
                 got = recorded.setdefault(str(float(sf)), {})
                 for name in workloads.SQL_ANALYTICS:
                     spec = registry.get(name)

@@ -3,13 +3,13 @@
 
     python3 perfbench/run.py --workload sql_analytics --seed 1 --seconds 5 --trace 0
 
-Run from the root of a checkout. The run generates its input tables,
-starts the package's session on ``local[<usable cores>]``, sets up
-three times (session start, registry import, warm-up scan of every
-table), checks every operation's output, then runs closed-loop passes
-over the workload's operations (in an order drawn from ``--seed`` for
-the query workload) until the workload's passes are done and
-``--seconds`` have passed. Everything it writes stays under
+Run from the root of a checkout. The run reads the fixed fixture
+tables in ``perfbench/data/``, sets up once from cold (JVM and session
+start on ``local[<usable cores>]``, registry import, warm-up scan of
+every table), checks every operation's output, then runs closed-loop
+passes over the workload's operations (in an order drawn from
+``--seed`` for the query workload) until the workload's passes are done
+and ``--seconds`` have passed. Everything it writes stays under
 ``.perfbench_runs/`` in the checkout.
 
 The last line of standard output is one JSON object: the end-to-end
@@ -36,9 +36,8 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 RUNS = os.path.join(ROOT, ".perfbench_runs")
-SETUPS = 3
+DATA = os.path.join(HERE, "data")
 
-import gen  # noqa: E402
 import workloads  # noqa: E402
 from stats import median, tail  # noqa: E402
 from spans import Tracer  # noqa: E402
@@ -52,12 +51,12 @@ def _args() -> argparse.Namespace:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--sf", type=float, default=0.01,
-                    help="scale factor of the generated tables (default 0.01)")
+    ap.add_argument("--sf", type=float, default=0.01, choices=(0.01, 0.001),
+                    help="scale factor of the fixture tables (default 0.01)")
     return ap.parse_args()
 
 
-def _hermetic_env(run_dir: str, cores: int) -> None:
+def _hermetic_env(run_dir: str, cores: int, trace: bool) -> None:
     """Point every place Spark, the JVM and Python write to inside the
     run directory, and let Python workers import the package."""
     for sub in ("local", "tmp", "warehouse"):
@@ -68,16 +67,19 @@ def _hermetic_env(run_dir: str, cores: int) -> None:
         "spark.sql.warehouse.dir": os.path.join(run_dir, "warehouse"),
         "spark.driver.extraJavaOptions": java_opts,
         "spark.ui.showConsoleProgress": "false",
-        # keep every job, stage and SQL execution of the run readable
-        "spark.ui.retainedJobs": "1000000",
-        "spark.ui.retainedStages": "1000000",
-        "spark.sql.ui.retainedExecutions": "1000000",
     }
+    if trace:  # keep every job, stage and SQL execution of the run readable
+        conf.update({"spark.ui.retainedJobs": "1000000",
+                     "spark.ui.retainedStages": "1000000",
+                     "spark.sql.ui.retainedExecutions": "1000000"})
     os.environ.update(
         SPARK_GRAFT_CPUS=str(cores),
         SPARK_GRAFT_UI="false",
-        # a heap small enough that every run fills it, so the JVM's peak
-        # RSS does not depend on when G1 chose to grow the heap
+        # With the package's 8 GB default, G1 grows the heap by the GC
+        # time it sees, which follows the host's speed: the driver's
+        # peak RSS spread by 24-39% (IQR/median) between runs. A 1 GB
+        # heap is fully committed in every run; the peak heap use
+        # inside it (440-790 MB) is reported beside the RSS.
         SPARK_DRIVER_MEMORY="1g",
         SPARK_LOCAL_DIRS=os.path.join(run_dir, "local"),
         TMPDIR=tmp,
@@ -90,12 +92,10 @@ def _hermetic_env(run_dir: str, cores: int) -> None:
     tempfile.tempdir = None  # re-read TMPDIR
 
 
-def _setup(tracer: Tracer, spark, sf_dir: str):
-    """One set-up from a cold package: stop the previous session, drop
-    the package's modules, then start the session, import the registry
-    and scan every table once."""
-    if spark is not None:
-        spark.stop()
+def _setup(tracer: Tracer, sf_dir: str):
+    """The run's one set-up, from cold: drop the package's modules, then
+    start the session (and with it the JVM), import the registry and
+    scan every table once."""
     for mod in [m for m in sys.modules if m == PKG or m.startswith(PKG + ".")]:
         del sys.modules[mod]
     with tracer.span("setup", "setup") as rec:
@@ -116,6 +116,14 @@ def _vm_hwm_mb(pid: int | str) -> float:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024
     raise RuntimeError(f"no VmHWM for pid {pid}")
+
+
+def _peak_heap_mb(spark) -> float:
+    """Peak use of the driver JVM's heap: the sum of its heap pools'
+    peak usage, from the JVM's memory-pool beans."""
+    beans = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return sum(p.getPeakUsage().getUsed() for p in beans.getMemoryPoolMXBeans()
+               if p.getType().toString() == "Heap memory") / 2 ** 20
 
 
 def _tree_bytes(path: str) -> int:
@@ -143,7 +151,7 @@ class Run:
     def __init__(self, args, run_dir: str):
         self.args = args
         self.run_dir = run_dir
-        self.sf_dir = os.path.join(run_dir, "data")
+        self.sf_dir = os.path.join(DATA, f"sf{args.sf}")
         self.workload = workloads.WORKLOADS[args.workload]
         self.ops = self.workload.ops
         self.is_dag = args.workload == "asset_dags"
@@ -153,10 +161,9 @@ class Run:
         self.checked = 0
         self.attempted = self.failed = 0
         self.latencies: list[float] = []
-        self.by_op: dict[str, list[float]] = {}
+        self.by_op: dict[str, list[float | None]] = {}  # op name -> latency per pass
         self.pass_walls: list[float] = []
         self.written = self.input_bytes = 0
-        self.setup_secs: list[float] = []
 
     def _order(self, salt: int) -> list[str]:
         if not self.workload.shuffle:
@@ -174,25 +181,23 @@ class Run:
     def execute(self) -> None:
         self.phases: dict[str, float] = {}
         self._phase_t0 = time.perf_counter()
-        gen.write(self.sf_dir, self.args.sf)
         self.load_start = os.getloadavg()[0]
-        self._phase("generate")
         spark = None
         try:
-            for _ in range(SETUPS):
-                spark, rec = _setup(self.tracer, spark, self.sf_dir)
-                self.setup_secs.append(rec["end"] - rec["start"])
+            spark, rec = _setup(self.tracer, self.sf_dir)
+            self.setup_s = rec["end"] - rec["start"]
             self.spark = spark
             self.spark_version = spark.version
             self.tracer.bind(spark)
-            self._phase("setups")
+            self._phase("setup")
             if not self.is_dag:
                 self._gate()
             self._phase("gate")
             self._passes()
             self._phase("passes")
-            self.rss_mb = (_vm_hwm_mb(spark.sparkContext._gateway.proc.pid)
-                           + _vm_hwm_mb("self"))
+            self.jvm_rss_mb = _vm_hwm_mb(spark.sparkContext._gateway.proc.pid)
+            self.py_rss_mb = _vm_hwm_mb("self")
+            self.heap_mb = _peak_heap_mb(spark)
         finally:
             if spark is not None:
                 _stop(spark)
@@ -263,25 +268,31 @@ class Run:
             shutil.rmtree(out_dir)
         if ok and name not in self.problems:
             self.latencies.append(seconds)
-            self.by_op.setdefault(name, []).append(seconds)
         else:
             self.failed += 1
+            seconds = None
+        self.by_op.setdefault(name, []).append(seconds)
 
     # -- reporting ------------------------------------------------------
 
     def end_to_end(self) -> dict[str, tuple[float, str]]:
         tail_s, self.tail_pct, self.tail_n = tail(self.latencies)
+        p50_of = self.workload.p50_of
+        p50 = (self.latencies if p50_of is None else
+               [s for s in self.by_op[p50_of][1:] if s is not None])
         return {
-            "setup_s": (median(self.setup_secs), "s"),
+            "setup_s": (self.setup_s, "s"),
             "wall_s": (median(self.pass_walls), "s"),
-            "op_s.p50": (median(self.latencies), "s"),
+            "op_s.p50": (median(p50), "s"),
             "op_s.tail": (tail_s, "s"),
-            "peak_rss_mb": (self.rss_mb, "MB"),
+            "peak_rss_mb": (self.jvm_rss_mb + self.py_rss_mb, "MB"),
         }
 
     def per_layer(self) -> dict[str, tuple[float, str]]:
-        return layer_metrics(self.tracer, len(self.pass_walls), self.cores,
-                             self.checked, len(self.problems))
+        metrics = layer_metrics(self.tracer, len(self.pass_walls), self.cores,
+                                self.checked, len(self.problems))
+        metrics["session.peak_heap_mb"] = (self.heap_mb, "MB")
+        return metrics
 
     def report(self) -> dict:
         metrics = self.per_layer() if self.args.trace else self.end_to_end()
@@ -291,15 +302,22 @@ class Run:
               f"spark={self.spark_version} python={platform.python_version()} "
               f"passes={len(self.pass_walls)} ops/pass={len(self.ops)}")
         print("  phases: " + " ".join(f"{k}={v:.1f}s" for k, v in self.phases.items()))
-        print("  op medians: " + " ".join(f"{k}={median(v):.3f}s"
-                                          for k, v in sorted(self.by_op.items())))
+        setup = next(s for s in self.tracer.spans if s["kind"] == "setup")
+        print("  set-up: " + " ".join(f"{c['kind']}={c['end'] - c['start']:.2f}s"
+                                      for c in self.tracer.children(setup)))
+        print("  op latency per pass: " + " ".join(
+            f"{k}=" + ",".join("failed" if v is None else f"{v:.3f}" for v in vs)
+            for k, vs in sorted(self.by_op.items())))
         for name, (value, unit) in metrics.items():
             note = ""
             if name == "op_s.tail":
                 note = (f"  (p{self.tail_pct}, n={self.tail_n})" if self.tail_pct < 100 else
                         f"  (maximum: n={self.tail_n} is too few for a tail above the median)")
-            if name == "setup_s":
-                note = f"  (median of {SETUPS} set-ups)"
+            if name == "peak_rss_mb":
+                note = (f"  (JVM {self.jvm_rss_mb:.0f} + Python {self.py_rss_mb:.0f}; "
+                        f"JVM peak heap use {self.heap_mb:.0f} MB)")
+            if name == "op_s.p50" and self.workload.p50_of:
+                note = f"  ({self.workload.p50_of}, passes after the first)"
             print(f"  {name:<34} {value:>16.6g} {unit}{note}")
         if not a.trace:
             print(f"  {'fail_ratio':<34} {self.failed / self.attempted:>16.6g} "
@@ -385,6 +403,7 @@ def layer_metrics(tracer: Tracer, passes: int, cores: int, checked: int,
         "oracle.checked": (checked, "count"),
         "oracle.mismatches": (mismatches, "count"),
         "trace.overhead_s": (per(tracer.collect_s), "s"),
+        "trace.op_s": (per(sum(dur(s) for s in ops)), "s"),
         "trace.op_self_s": (per(sum(s["self_s"] for s in ops)), "s"),
     }
 
@@ -395,7 +414,7 @@ def main() -> int:
     run_dir = tempfile.mkdtemp(prefix=f"{args.workload}-", dir=RUNS)
     try:
         run = Run(args, run_dir)
-        _hermetic_env(run_dir, run.cores)
+        _hermetic_env(run_dir, run.cores, bool(args.trace))
         sys.path.insert(0, ROOT)
         importlib.import_module(PKG)  # fails here when the package is absent
         run.execute()

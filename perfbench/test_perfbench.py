@@ -123,8 +123,10 @@ def test_smoke_run_at_sf0_001(workload, trace):
     for m in declared:
         assert result["metrics"][m["name"]]["unit"] == m["unit"]
     if trace:
-        assert result["metrics"]["operators.tasks"]["value"] > 0
-        assert (result["metrics"]["trace.op_self_s"]["value"]
-                <= result["metrics"]["trace.overhead_s"]["value"])
+        m = {k: v["value"] for k, v in result["metrics"].items()}
+        assert m["operators.tasks"] > 0
+        # the build and exec spans account for an operation's latency:
+        # what neither covers is under 2% of it
+        assert 0 <= m["trace.op_self_s"] < 0.02 * m["trace.op_s"]
     else:
         assert all(v["value"] > 0 for v in result["metrics"].values())
