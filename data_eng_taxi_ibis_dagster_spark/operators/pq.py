@@ -53,6 +53,7 @@ from data_eng_taxi_ibis_dagster_spark.operators.similarity import (
     as_double,
     cosine,
     cosine_topk,
+    sql_double_array,
     squared_l2,
 )
 
@@ -171,12 +172,12 @@ def train_codebooks_lloyd(df: DataFrame, *, vec_col: str = "embedding",
 
 
 def _centroid_literal(books: dict[int, list[list[float]]]) -> Column:
-    """m·k centroids as a literal array of (sub, code, cvec) structs."""
-    return F.array(*[
-        F.struct(F.lit(s).alias("sub"), F.lit(j).alias("code"),
-                 F.array(*[F.lit(float(x)) for x in c]).alias("cvec"))
-        for s, cents in books.items() for j, c in enumerate(cents)
-    ])
+    """m·k centroids as a literal array of (sub, code, cvec) structs,
+    parsed from one SQL expression rather than assembled from about
+    1,500 py4j ``F.lit`` calls per Lloyd iteration at m=8, k=16."""
+    return F.expr("array(" + ", ".join(
+        f"named_struct('sub', {s}, 'code', {j}, 'cvec', {sql_double_array(c)})"
+        for s, cents in books.items() for j, c in enumerate(cents)) + ")")
 
 
 def assign_codes(longf: DataFrame,

@@ -17,6 +17,8 @@ DataFrame transform — deterministic across runs and engines.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -340,6 +342,17 @@ def cosine_threshold_pairs_blocked(df: DataFrame, threshold: float, *,
     )
 
 
+def sql_double_array(xs) -> str:
+    """SQL text of an ``array<double>`` literal holding exactly ``xs``.
+    Each element is its shortest round-trip ``repr`` with the ``D``
+    suffix (without it the parser reads a DECIMAL), which parses back
+    to the same double bit for bit. One ``F.expr`` over this text
+    replaces a py4j ``F.lit`` call per element in the Lloyd loops."""
+    return "array(" + ", ".join(
+        f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+        for x in map(float, xs)) + ")"
+
+
 def squared_l2(a: Column, b: Column) -> Column:
     """Sequential-fold squared euclidean distance between two vectors."""
     return F.aggregate(
@@ -393,8 +406,7 @@ def lloyd_assignments(df: DataFrame, *, vec_col: str = "embedding",
     assigned = None
     for _ in range(iters):
         dists = F.array(*[
-            squared_l2(F.col("_v"),
-                       F.array(*[F.lit(float(x)) for x in c]))
+            squared_l2(F.col("_v"), F.expr(sql_double_array(c)))
             for c in centroids
         ])
         cluster = (F.array_position(dists, F.array_min(dists)) - 1

@@ -12,9 +12,13 @@ runner.
 
 Unlike the reference, assets share ONE SparkSession (the reference
 stops and restarts the JVM per asset — a measurement and latency bug we
-deliberately do not reproduce), and asset handoff can be in-memory
-DataFrames rather than files, though file handoff (parquet) remains the
-default between *pipelines* for restartability at scale.
+deliberately do not reproduce). Within a pipeline the hand-off is
+in-memory: like the reference's tables and frames, every DataFrame
+asset is materialized once, as an executor-local checkpoint its
+consumers read instead of re-running its lineage. A checkpoint lives
+in executor storage only, so it does not survive the loss of an
+executor; file hand-off (parquet) remains the way between *pipelines*
+for restartability at scale.
 """
 
 from __future__ import annotations
@@ -81,7 +85,16 @@ class Definitions:
                     selection: list[str] | None = None) -> dict[str, AssetResult]:
         """Run assets in dependency order (the reference's ``dagster
         materialize``), logging per-asset wall-clock and row counts —
-        the O2 observability contract."""
+        the O2 observability contract.
+
+        A DataFrame an asset returns is executed exactly once, here: it
+        is replaced by a lineage-truncated local checkpoint, and the
+        count that fills the checkpoint gives ``rows``. Downstream
+        assets and ``AssetResult.value`` receive the checkpoint, and
+        ``seconds`` includes its execution. The checkpoint is
+        executor-local and not tolerant of executor loss; hand data to
+        another pipeline as parquet. An error raised while executing
+        the value is logged as the asset's failure."""
         wanted = set(selection or self.assets)
         # pull in transitive deps of the selection
         frontier = list(wanted)
@@ -98,13 +111,16 @@ class Definitions:
             asset = self.assets[name]
             dep_values = [results[d].value for d in asset.deps]
             start = time.perf_counter()
+            rows = None
             try:
                 value = asset.fn(spark, *dep_values)
+                if isinstance(value, DataFrame):
+                    value = value.localCheckpoint(eager=False)
+                    rows = value.count()
             except Exception:
                 logger.exception("asset %s failed", name)
                 raise
             seconds = time.perf_counter() - start
-            rows = value.count() if isinstance(value, DataFrame) else None
             results[name] = AssetResult(name, value, seconds, rows)
             logger.info(
                 "asset %s (%s) materialized in %.2fs%s",
@@ -135,6 +151,7 @@ def training_data_definitions(sf_dir: str, out_dir: str, *,
     from pyspark.sql import functions as F
 
     from data_eng_taxi_ibis_dagster_spark.operators.dedup import (
+        _right_size,
         dedup_clusters,
         exact_dedup,
         minhash_near_dup_pairs,
@@ -153,7 +170,10 @@ def training_data_definitions(sf_dir: str, out_dir: str, *,
 
     @defs.asset(compute_kind="pyspark")
     def ingest_docs(spark: SparkSession) -> DataFrame:
-        return load_table(spark, sf_dir, "documents")
+        # fan a scan of fewer files than slots out here: downstream
+        # assets read its checkpoint, which hides the file count from
+        # the per-document operators' own _right_size
+        return _right_size(load_table(spark, sf_dir, "documents"))
 
     @defs.asset(deps=("ingest_docs",), compute_kind="pyspark")
     def annotate(spark: SparkSession, docs: DataFrame) -> DataFrame:

@@ -114,28 +114,28 @@ def _load_all() -> None:
 # than this round -- the driver writes CORRECTNESS_r{N+1}.json after
 # the final commit of round N+1, so a judged tree can never list it;
 # any discrepancy AT or BELOW the watermark still fails hard.
-_DRIVER_VERIFIED_AS_OF = 11
+_DRIVER_VERIFIED_AS_OF = 13
 _DRIVER_VERIFIED = {
     "abc_pareto_customers": 11,
     "abtest_two_proportion": 11,
-    "agg_argminmax_median_bits": 7,
+    "agg_argminmax_median_bits": 13,
     "agg_bitwise_flags": 9,
-    "agg_conditional_bool": 7,
-    "agg_exact_linear_stats": 7,
-    "agg_salted_hot_key": 7,
-    "agg_string_concat_sorted": 7,
+    "agg_conditional_bool": 13,
+    "agg_exact_linear_stats": 13,
+    "agg_salted_hot_key": 13,
+    "agg_string_concat_sorted": 13,
     "anomaly_mad_outliers": 10,
     "apply_in_arrow_group_stats": 11,
-    "apply_in_pandas_zscore": 7,
-    "approx_aggregates": 7,
+    "apply_in_pandas_zscore": 13,
+    "approx_aggregates": 13,
     "approx_exact_regime_audit": 10,
-    "arrow_python_udf": 7,
+    "arrow_python_udf": 13,
     "audio_twin_audit": 10,
     "basket_brand_pairs": 8,
-    "bpe_encode_audit": 10,
+    "bpe_encode_audit": 13,
     "bpe_encode_corpus": 11,
     "bpe_learn_merges": 11,
-    "bpe_merge_audit": 11,
+    "bpe_merge_audit": 13,
     "brand_quantity_revenue": 8,
     "chi2_type_by_hour": 10,
     "cluster_balanced_sample": 11,
@@ -146,40 +146,40 @@ _DRIVER_VERIFIED = {
     "contrastive_pair_mining": 10,
     "cooccurrence_edges_audit": 10,
     "correlated_scalar_subquery": 9,
-    "count_lineitem": 7,
+    "count_lineitem": 13,
     "cube_sales": 10,
-    "cum_revenue_by_orderdate": 7,
-    "curation_best_rep": 11,
+    "cum_revenue_by_orderdate": 13,
+    "curation_best_rep": 13,
     "curation_funnel": 10,
-    "curation_pairs": 11,
-    "curation_stack": 11,
-    "customer_order_distribution": 7,
-    "data_mixture_resample": 9,
+    "curation_pairs": 13,
+    "curation_stack": 13,
+    "customer_order_distribution": 13,
+    "data_mixture_resample": 13,
     "decontaminate_ngram": 9,
-    "dedup_allpairs_prefix": 11,
+    "dedup_allpairs_prefix": 13,
     "dedup_cdc_chunks": 10,
     "dedup_cluster_audit": 9,
-    "dedup_cluster_pick": 11,
+    "dedup_cluster_pick": 13,
     "dedup_containment": 11,
     "dedup_edit_distance": 9,
-    "dedup_embedding_cosine": 7,
-    "dedup_exact": 7,
+    "dedup_embedding_cosine": 13,
+    "dedup_exact": 13,
     "dedup_incremental": 9,
-    "dedup_incremental_batch": 11,
-    "dedup_incremental_persisted": 11,
-    "dedup_minhash_audit": 11,
-    "dedup_minhash_lsh": 11,
+    "dedup_incremental_batch": 13,
+    "dedup_incremental_persisted": 13,
+    "dedup_minhash_audit": 13,
+    "dedup_minhash_lsh": 13,
     "dedup_ngram_jaccard": 9,
-    "dedup_simhash": 7,
+    "dedup_simhash": 13,
     "dedup_span_removal": 10,
     "dedup_span_windows": 10,
-    "distinct_segments": 7,
+    "distinct_segments": 13,
     "domain_cap_sample": 11,
     "dsir_importance_topk": 11,
     "embedding_centroids": 10,
     "embedding_covariance": 10,
     "embedding_pca_project": 11,
-    "embedding_quantize_int8": 9,
+    "embedding_quantize_int8": 13,
     "events_activity_streaks": 9,
     "events_asof_purchase_click": 8,
     "events_click_purchase_interval": 8,
@@ -195,9 +195,9 @@ _DRIVER_VERIFIED = {
     "events_trailing_24h_spend": 11,
     "events_value_quantiles_hourly": 9,
     "exact_count_distinct": 8,
-    "explode_tokens": 7,
+    "explode_tokens": 13,
     "fingerprint_winnowing": 10,
-    "flagship_avg_price": 11,
+    "flagship_avg_price": 13,
     "flagship_sql_path": 8,
     "forecast_revenue": 10,
     "forecast_seasonal_naive": 11,
@@ -205,7 +205,7 @@ _DRIVER_VERIFIED = {
     "global_sales_opportunity": 10,
     "global_shuffle_order": 9,
     "graph_triangle_tokens": 10,
-    "grouping_sets_sql": 7,
+    "grouping_sets_sql": 13,
     "heavy_hitter_tokens": 9,
     "hierarchy_pointer_doubling": 10,
     "histogram_equidepth_price": 11,
@@ -221,9 +221,9 @@ _DRIVER_VERIFIED = {
     "join_null_safe_priority": 9,
     "join_range_ship_lag": 8,
     "join_sales_by_region": 8,
-    "join_salted_skew": 10,
+    "join_salted_skew": 13,
     "join_semi_customers_with_orders": 8,
-    "json_schema_parse": 10,
+    "json_schema_parse": 13,
     "kmeans_estep_audit": 10,
     "kmeans_lloyd": 11,
     "kmeans_two_iter_audit": 10,
@@ -235,7 +235,7 @@ _DRIVER_VERIFIED = {
     "late_shipment_priority": 10,
     "lateral_topn_per_customer": 9,
     "lm_bigram_familiarity": 10,
-    "local_supplier_volume": 7,
+    "local_supplier_volume": 13,
     "map_in_arrow_stats": 11,
     "markov_event_transitions": 11,
     "min_cost_supplier": 8,
@@ -249,23 +249,23 @@ _DRIVER_VERIFIED = {
     "ngram_bigram_counts": 9,
     "ngram_novelty": 11,
     "null_semantics": 11,
-    "order_priority_check": 7,
-    "pack_sequences": 7,
+    "order_priority_check": 13,
+    "pack_sequences": 13,
     "pagerank_cooccurrence": 11,
     "pagerank_iter1_audit": 10,
-    "pandas_udf_grouped": 7,
-    "pandas_udf_scalar": 7,
+    "pandas_udf_grouped": 13,
+    "pandas_udf_scalar": 13,
     "parts_supplier_relationship": 8,
-    "percentile_cont_price": 7,
-    "percentile_disc_price": 7,
+    "percentile_cont_price": 13,
+    "percentile_disc_price": 13,
     "phash_twin_audit": 10,
     "pii_redact_digits": 9,
     "pivot_status_by_priority": 10,
     "pricing_summary": 10,
     "product_type_profit": 8,
-    "profile_orders": 7,
+    "profile_orders": 13,
     "promo_part_suppliers": 8,
-    "promo_revenue_share": 7,
+    "promo_revenue_share": 13,
     "pysource_telemetry_rollup": 10,
     "quality_classifier_linear": 11,
     "quality_gopher_rules": 9,
@@ -274,9 +274,9 @@ _DRIVER_VERIFIED = {
     "quantile_sketch_incremental": 9,
     "quantile_sketch_rollup": 8,
     "retrieval_bm25_topk": 11,
-    "retrieval_stack_audit": 7,
-    "retrieval_stack_topk": 7,
-    "returned_items_top_customers": 7,
+    "retrieval_stack_audit": 13,
+    "retrieval_stack_topk": 13,
+    "returned_items_top_customers": 13,
     "rfm_segmentation": 8,
     "rolling_7d_active_users": 11,
     "rollup_sales": 10,
@@ -304,7 +304,7 @@ _DRIVER_VERIFIED = {
     "simhash_twin_audit": 11,
     "similarity_ann_audit": 9,
     "similarity_ann_srp": 9,
-    "similarity_cosine_topk": 9,
+    "similarity_cosine_topk": 13,
     "similarity_ivf": 9,
     "similarity_ivf_audit": 11,
     "similarity_ivfpq_audit": 7,
@@ -320,13 +320,13 @@ _DRIVER_VERIFIED = {
     "stratified_sample_label": 7,
     "subquery_cte_having": 7,
     "systematic_sample": 11,
-    "table_diff_orders": 6,
+    "table_diff_orders": 13,
     "text_html_strip": 11,
     "text_lang_id": 9,
     "text_quality": 9,
     "text_shingle_fingerprint": 9,
     "text_stats": 9,
-    "textrank_keywords": 6,
+    "textrank_keywords": 13,
     "tfidf_top_term": 8,
     "top_supplier": 8,
     "topk_orders": 9,
@@ -339,12 +339,12 @@ _DRIVER_VERIFIED = {
     "video_frames_audit": 11,
     "volume_shipping": 8,
     "waiting_supplier_check": 8,
-    "weighted_median_price": 6,
+    "weighted_median_price": 13,
     "weighted_sample_aes": 10,
     "window_distribution_funcs": 7,
     "window_rank_lag": 9,
     "window_running_total": 9,
-    "zipf_vocab_profile": 6,
+    "zipf_vocab_profile": 13,
 }
 
 # Queries whose plan was REWRITTEN after their last driver row: the

@@ -2,13 +2,31 @@
 transitive deps, per-asset observability, and the reference pipeline's
 DataFrame-vs-SQL result equivalence."""
 
+import logging
+import time
+
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from data_eng_taxi_ibis_dagster_spark.pipeline import (
     Definitions,
     taxi_pipeline_definitions,
 )
+
+
+def _assert_executed_once(results):
+    """The hand-off contract: every DataFrame asset's value is a
+    lineage-truncated checkpoint (its analyzed plan's only leaves are
+    LogicalRDDs, not file scans), and ``rows`` is its row count."""
+    frames = [r for r in results.values() if isinstance(r.value, DataFrame)]
+    assert frames
+    for r in frames:
+        leaves = r.value._jdf.queryExecution().analyzed().collectLeaves()
+        names = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+        assert names == {"LogicalRDD"}, (r.name, names)
+        assert r.rows == r.value.count(), r.name
 
 
 def test_dependency_order_and_results(spark, sf_dir, tmp_path):
@@ -25,6 +43,7 @@ def test_dependency_order_and_results(spark, sf_dir, tmp_path):
     df_res = results["analyse_dataframe"].value.toPandas().sort_values("l_quantity").reset_index(drop=True)
     sql_res = results["analyse_sql"].value.toPandas().sort_values("l_quantity").reset_index(drop=True)
     pd.testing.assert_frame_equal(df_res, sql_res)
+    _assert_executed_once(results)
 
 
 def test_selection_pulls_transitive_deps(spark, sf_dir, tmp_path):
@@ -59,13 +78,36 @@ def test_failure_propagates(spark):
         defs.materialize(spark)
 
 
+def test_execution_failure_is_logged_as_asset_failure(spark, caplog):
+    """A DataFrame that fails only when it runs fails in the runner's
+    materialization, and is logged under the asset's name like an
+    error raised by the asset function."""
+    defs = Definitions()
+
+    @defs.asset()
+    def late_boom(spark):
+        return spark.range(1).select(F.raise_error(F.lit("late boom")))
+
+    late_boom(spark)  # building the plan does not raise
+    with caplog.at_level(logging.ERROR, logger=Definitions.__module__), \
+            pytest.raises(Exception, match="late boom"):
+        defs.materialize(spark)
+    assert "asset late_boom failed" in caplog.text
+
+
 def test_training_data_pipeline_end_to_end(spark, sf_dir, tmp_path):
     from data_eng_taxi_ibis_dagster_spark.pipeline import (
         training_data_definitions,
     )
 
     defs = training_data_definitions(sf_dir, str(tmp_path))
+    start = time.perf_counter()
     results = defs.materialize(spark)
+    wall = time.perf_counter() - start
+    # the runner's own work between assets is negligible: asset seconds,
+    # which include each value's one execution, account for the wall
+    assert sum(r.seconds for r in results.values()) >= 0.9 * wall
+    _assert_executed_once(results)
     n_ingested = results["ingest_docs"].rows
     n_filtered = results["filter_docs"].rows
     n_gated = results["classifier_gate"].rows

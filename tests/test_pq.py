@@ -164,6 +164,42 @@ def test_lloyd_codebook_small_corpus_shrinks_k(spark, sf_dir):
     assert book.count() == 4 * 3
 
 
+def test_assign_codes_matches_python_argmin(spark):
+    """The E-step's centroid literal carries every double bit for bit:
+    codes equal a pure-Python sequential-fold argmin over the same
+    books, ties going to the lowest code. Subspace 0's first two
+    centroids differ only in the last bit of one element, so a literal
+    that rounded it would tie them and flip the code to 0."""
+    import random
+
+    rng = random.Random(7)
+    books = {
+        0: [[0.30000000000000004, 1.0], [0.3, 1.0], [0.3, 1.0]],
+        1: [[-0.0, 5e-324], [1 / 3, 123456.789], [1e-07, -2.5]],
+        2: [[rng.uniform(-1, 1), rng.uniform(-1, 1)] for _ in range(4)],
+    }
+    rows = [(0, [0.3, 1.0]), (0, [0.30000000000000004, 1.0])]
+    rows += [(s, list(c)) for s, cents in books.items() for c in cents]
+    rows += [(s, [rng.uniform(-2, 2), rng.uniform(-2, 2)])
+             for s in books for _ in range(20)]
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + (x - y) * (x - y)
+        return acc
+
+    want = [min(range(len(books[s])), key=lambda j: (fold(v, books[s][j]), j))
+            for s, v in rows]
+    longf = spark.createDataFrame(
+        [(i, s, v) for i, (s, v) in enumerate(rows)],
+        "i int, sub int, subvec array<double>")
+    got = [r["code"] for r in
+           PQ.assign_codes(longf, books).orderBy("i").collect()]
+    assert want[:2] == [1, 0]
+    assert got == want
+
+
 def test_adc_kernel_exact_config_equals_brute_force(spark, sf_dir):
     """The numpy lookup-table ADC backend with the lossless codebook
     and exact refinement must reproduce brute force exactly (final
